@@ -383,7 +383,8 @@ def with_synthetic_gif_payload(
     # group, so without this every encode+decode runs serially in ONE
     # task: measured 18.6s -> ~2s at sf0.1). n_parts defaults to the
     # session's parallelism (r14) — scale-adaptive, not a local constant.
-    n_parts = n_parts or documents.sparkSession.sparkContext.defaultParallelism
+    if n_parts is None:
+        n_parts = documents.sparkSession.sparkContext.defaultParallelism
     return documents.select("doc_id").repartition(n_parts, "doc_id").select(
         "doc_id", make(F.col("doc_id")).alias("payload")
     )

@@ -415,7 +415,8 @@ def with_blocky_jpeg_payload(documents, n_parts: int | None = None):
     # pipeline bounds per-task batch bytes anyway, cf. extract_features).
     # n_parts defaults to the session's parallelism (r14) —
     # scale-adaptive, not a local constant.
-    n_parts = n_parts or documents.sparkSession.sparkContext.defaultParallelism
+    if n_parts is None:
+        n_parts = documents.sparkSession.sparkContext.defaultParallelism
     return documents.select("doc_id").repartition(n_parts, "doc_id").select(
         "doc_id", make_jpeg(F.col("doc_id")).alias("payload")
     )

@@ -303,7 +303,8 @@ def with_mjpeg_mp4_payload(documents, n_parts: int | None = None):
     # spread the codec work before the UDF (with_blocky_jpeg_payload's
     # one-row-group lesson); n_parts defaults to the session's
     # parallelism (r14) — scale-adaptive, not a local constant
-    n_parts = n_parts or documents.sparkSession.sparkContext.defaultParallelism
+    if n_parts is None:
+        n_parts = documents.sparkSession.sparkContext.defaultParallelism
     return documents.select("doc_id").repartition(n_parts, "doc_id").select(
         "doc_id", make(F.col("doc_id")).alias("payload")
     )

@@ -981,9 +981,10 @@ def with_gradient_image_payload(
             )
         )
 
-    n = n_parts or documents.sparkSession.sparkContext.defaultParallelism
+    if n_parts is None:
+        n_parts = documents.sparkSession.sparkContext.defaultParallelism
     payload = make_png(F.col("doc_id"))
-    return documents.select("doc_id").repartition(n, "doc_id").select(
+    return documents.select("doc_id").repartition(n_parts, "doc_id").select(
         "doc_id",
         payload.alias("payload"),
         F.struct(
@@ -1019,9 +1020,10 @@ def with_tone_audio_payload(
             )
         )
 
-    n = n_parts or documents.sparkSession.sparkContext.defaultParallelism
+    if n_parts is None:
+        n_parts = documents.sparkSession.sparkContext.defaultParallelism
     payload = make_wav(F.col("doc_id"))
-    return documents.select("doc_id").repartition(n, "doc_id").select(
+    return documents.select("doc_id").repartition(n_parts, "doc_id").select(
         "doc_id",
         payload.alias("payload"),
         F.struct(

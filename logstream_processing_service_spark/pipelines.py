@@ -34,10 +34,12 @@ from .ml.embedding import hash_featurizer
 from .operators import relational as R
 from .operators.similarity import assign_nearest_centroid
 from .sources import load_table
+from .sources.tables import read_if_present
 
 INTERESTING_TYPES = ("error", "signup")  # reference: level IN ('error','warning')
 CENTROID_THRESHOLD = 0.35  # src/ml/vector_engine.py:8
 EMBED_DIM = 64  # test stand-in for the 384-dim MiniLM space
+INCIDENTS_SCHEMA = "cluster_id bigint, status string, created_at timestamp"
 
 
 def compose_text(df: DataFrame) -> DataFrame:
@@ -135,13 +137,10 @@ def upsert_parquet(
     spark: SparkSession, new: DataFrame, target: str, key: str = "event_id"
 ) -> None:
     """S6: ON CONFLICT DO NOTHING as anti-join append (idempotent sink)."""
-    deduped = new.dropDuplicates([key])
-    try:
-        existing = spark.read.parquet(target).select(key)
-        deduped = deduped.join(existing, key, "left_anti")
-    except Exception:
-        pass  # first write: no target yet
-    deduped.write.mode("append").parquet(target)
+    existing = read_if_present(spark, target, new.schema).select(key)
+    new.dropDuplicates([key]).join(existing, key, "left_anti").write.mode(
+        "append"
+    ).parquet(target)
 
 
 # ---------------------------------------------------------------------------
@@ -304,12 +303,7 @@ def run_incremental_batch(
     flagged = R.flag_anomalies(R.volume_zscore(history))
 
     inc_path = os.path.join(work_dir, "incidents")
-    try:
-        incidents = spark.read.parquet(inc_path)
-    except Exception:
-        incidents = spark.createDataFrame(
-            [], "cluster_id bigint, status string, created_at timestamp"
-        )
+    incidents = read_if_present(spark, inc_path, INCIDENTS_SCHEMA)
     actions = R.open_incident_upsert(
         flagged.select("cluster_id"), incidents
     )

@@ -1,4 +1,5 @@
-"""Parquet table scans (SURVEY §2.1 S1/S2).
+"""Parquet table scans (SURVEY §2.1 S1/S2) and the service's one table
+write path (``read_if_present`` / ``swap_in`` / ``merge_parquet``).
 
 Reference: ``fetch_logs_batch`` pulls whole SQL result sets into driver
 memory via ``pd.read_sql`` (src/db/log_ops.py:5-14). Here a scan is a lazy,
@@ -8,6 +9,10 @@ what downstream operators need, which is what makes the same code viable at
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,41 +121,101 @@ def write_partitioned(
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
+# ---------------------------------------------------------------------------
+# Service table I/O on the local filesystem: a read that may find no table
+# is ``read_if_present``, a rewrite is ``swap_in``.
+# ---------------------------------------------------------------------------
+
+
+def _hidden(name: str) -> bool:
+    # the names Spark's file index skips (``_batch=0`` partitions excepted)
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def data_files(path: str) -> Iterator[tuple[str, int]]:
+    """(file, bytes) for every file a parquet read of ``path`` scans."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for f in files:
+            if not _hidden(f):
+                p = os.path.join(root, f)
+                yield p, os.path.getsize(p)
+
+
+def _swap_dirs(path: str) -> tuple[str, str]:
+    path = path.rstrip("/")
+    return path + "._staged", path + "._old"
+
+
+def recover_swap(path: str) -> bool:
+    """Repair a swap that crashed between its two renames: the table path
+    is missing and its data sits under ``<path>._old``, so restore it. A
+    leftover staging directory is unreferenced either way and is dropped.
+    Returns True if the backup was restored."""
+    staged, backup = _swap_dirs(path)
+    recovered = not os.path.exists(path) and os.path.isdir(backup)
+    if recovered:
+        os.rename(backup, path)
+    if os.path.isdir(staged) and os.path.exists(path):
+        shutil.rmtree(staged)
+    return recovered
+
+
+def swap_in(df: DataFrame, path: str) -> None:
+    """Replace the table at ``path`` with ``df`` (which may read ``path``
+    itself): write ``<path>._staged``, then rename ``path`` to
+    ``<path>._old`` and the staging directory to ``path``. Readers see the
+    old or the new directory, never a partial write. The path is absent
+    between the two renames, so the caller owns single-writer scheduling;
+    a crash there is repaired by ``recover_swap``, which runs first here
+    and in ``read_if_present``. On Delta/Iceberg this is one commit."""
+    recover_swap(path)
+    staged, backup = _swap_dirs(path)
+    df.write.mode("overwrite").parquet(staged)
+    if os.path.isdir(backup):
+        shutil.rmtree(backup)
+    if os.path.exists(path):
+        os.rename(path, backup)
+    os.rename(staged, path)
+    if os.path.isdir(backup):
+        shutil.rmtree(backup)
+
+
+def read_if_present(spark: SparkSession, path: str, schema) -> DataFrame:
+    """The table at ``path``, or an empty frame with ``schema`` when there
+    is none yet (no directory, or no data files in it). Any failure to
+    read a table that is there propagates: treating an unreadable table
+    as absent would overwrite it or re-open incidents it holds."""
+    recover_swap(path)
+    if not any(data_files(path)):
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(path)
+
+
 def merge_parquet(
     spark: SparkSession,
     target: str,
     updates: DataFrame,
     key: str,
+    when_matched: str = "update",
+    matched_condition=None,
 ) -> None:
-    """MERGE INTO for plain parquet: WHEN MATCHED update (source row wins),
-    WHEN NOT MATCHED insert — the reference's dual write (embedding upsert +
-    cluster_id update in one txn, src/db/log_ops.py:66-81) as one
-    set-oriented sink.
-
-    Atomicity without a table format: the merged result is written to a
-    temp directory and swapped in with two renames (the ModelStore
-    blue/green move, T8). Readers see the old or the new directory, never a
-    partial write. On Delta/Iceberg this whole function is one MERGE INTO.
-    """
-    import os
-    import shutil
-
-    tmp = target.rstrip("/") + "._staged"
-    backup = target.rstrip("/") + "._old"
-    try:
-        existing = spark.read.parquet(target)
-    except Exception:
-        updates.dropDuplicates([key]).write.mode("overwrite").parquet(target)
-        return
-    deduped = updates.dropDuplicates([key])
-    merged = existing.join(deduped, key, "left_anti").unionByName(deduped)
-    merged.write.mode("overwrite").parquet(tmp)
-    # swap: target -> backup, tmp -> target, drop backup
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    os.rename(target, backup)
-    os.rename(tmp, target)
-    shutil.rmtree(backup)
+    """MERGE INTO for plain parquet: ``merge_full`` over the current table
+    (``read_if_present``), persisted by ``swap_in`` — the reference's dual
+    write (embedding upsert + cluster_id update in one txn,
+    src/db/log_ops.py:66-81) as one set-oriented sink. Defaults: WHEN
+    MATCHED update (source row wins), WHEN NOT MATCHED insert."""
+    existing = read_if_present(spark, target, updates.schema)
+    swap_in(
+        merge_full(
+            existing,
+            updates,
+            key,
+            when_matched=when_matched,
+            matched_condition=matched_condition,
+        ),
+        target,
+    )
 
 
 def merge_full(
@@ -164,9 +229,8 @@ def merge_full(
 ) -> DataFrame:
     """Delta-style MERGE as a pure DataFrame transform: full set of clauses —
     WHEN MATCHED [AND cond] UPDATE or DELETE, WHEN NOT MATCHED INSERT,
-    WHEN NOT MATCHED BY SOURCE DELETE. Returns the merged frame; pair with
-    ``merge_parquet``'s rename-swap (or a table format's MERGE INTO) to
-    persist.
+    WHEN NOT MATCHED BY SOURCE DELETE. Returns the merged frame;
+    ``merge_parquet`` persists it (on a table format: MERGE INTO).
 
     ``matched_condition`` is an optional callable receiving the joined
     frame (target columns as ``t.*``, source as ``s.*``) and returning a

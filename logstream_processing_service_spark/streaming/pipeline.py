@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from ..session import apply_runtime_conf
+from ..sources.tables import merge_parquet, read_if_present
 
 def _events_schema(spark: SparkSession, src: str) -> StructType:
     """The stream source needs an explicit schema; derive the ts column's
@@ -114,17 +115,10 @@ def upsert_sink(out_dir: str, key: str = "event_id"):
     target, then append (T2/S6: ON CONFLICT DO NOTHING, set-oriented).
     Re-delivered batches become no-ops, giving effective exactly-once on
     top of at-least-once delivery."""
+    from ..pipelines import upsert_parquet
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        target = f"{out_dir}/data"
-        new = batch_df.dropDuplicates([key])
-        try:
-            existing = spark.read.parquet(target).select(key)
-            new = new.join(existing, key, "left_anti")
-        except Exception:
-            pass  # first batch: nothing to dedup against
-        new.write.mode("append").parquet(target)
+        upsert_parquet(batch_df.sparkSession, batch_df, f"{out_dir}/data", key)
 
     return write
 
@@ -218,6 +212,7 @@ def run_anomaly_pipeline(
         open_incident_upsert,
         volume_zscore,
     )
+    from ..pipelines import INCIDENTS_SCHEMA
 
     hist_path = os.path.join(out_dir, "volume_history")
     inc_path = os.path.join(out_dir, "incidents")
@@ -232,12 +227,7 @@ def run_anomaly_pipeline(
         vol.write.mode("overwrite").parquet(f"{hist_path}/ingest_batch={batch_id}")
         history = sp.read.parquet(hist_path).drop("ingest_batch")
         flagged = flag_anomalies(volume_zscore(history))
-        try:
-            incidents = sp.read.parquet(inc_path)
-        except Exception:
-            incidents = sp.createDataFrame(
-                [], "cluster_id bigint, status string, created_at timestamp"
-            )
+        incidents = read_if_present(sp, inc_path, INCIDENTS_SCHEMA)
         actions = open_incident_upsert(flagged.select("cluster_id"), incidents)
         (
             actions.filter(F.col("action") == "insert")
@@ -345,44 +335,21 @@ def merge_sink(
     matched_condition=None,
 ):
     """foreachBatch MERGE sink: the update-capable sibling of
-    ``upsert_sink`` (which is insert-only). Each micro-batch runs the full
-    Delta-style clause set (sources/tables.py ``merge_full``) against the
-    target and swaps the result in atomically (rename pair — readers see
-    old or new, never partial).
+    ``upsert_sink`` (which is insert-only). Each micro-batch is one
+    ``sources.tables.merge_parquet`` into ``{out_dir}/data``.
 
     Replay-idempotent on at-least-once delivery: re-merging the same batch
     updates rows to the values they already hold and inserts nothing new.
-    On a table format (Delta/Iceberg) this whole sink is one MERGE INTO
-    with snapshot isolation; the rename swap is the plain-parquet stand-in.
     """
-    import shutil
-
-    from ..sources.tables import merge_full
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        target = f"{out_dir}/data"
-        try:
-            # safe to read lazily: the merge writes to tmp and the target
-            # dir is only renamed AFTER that write succeeds
-            existing = spark.read.parquet(target)
-        except Exception:
-            existing = spark.createDataFrame([], batch_df.schema)
-        merged = merge_full(
-            existing,
+        merge_parquet(
+            batch_df.sparkSession,
+            f"{out_dir}/data",
             batch_df,
             key,
             when_matched=when_matched,
             matched_condition=matched_condition,
         )
-        tmp, backup = target + "._staged", target + "._old"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        if os.path.exists(target):
-            os.rename(target, backup)
-        os.rename(tmp, target)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
 
     return write

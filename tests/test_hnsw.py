@@ -349,6 +349,8 @@ def test_einsum_fallback_path_matches_private_kernel():
     numpy 2.x. Exercise the fallback EXPLICITLY — swap it in, rebuild a
     small index, and pin graph identity with the private-kernel build —
     so the except branch stays covered even while numpy 1.x is pinned."""
+    if H._c_einsum is np.einsum:
+        pytest.skip("numpy binds np.einsum itself: no private kernel to compare")
     rng = np.random.RandomState(11)
     vecs = [
         (i, [float(x) for x in rng.rand(8)]) for i in range(40)

@@ -1,9 +1,11 @@
 """Small-file compaction: fewer files, identical data, optional
-re-clustering that restores footer-stat pruning."""
+re-clustering that restores footer-stat pruning; crash and corruption
+faults on the table write path that compaction shares with the service."""
 
 from __future__ import annotations
 
 import glob
+import os
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -135,28 +137,145 @@ import pytest  # noqa: E402
 
 def test_compact_crash_recovery(spark, tmp_path):
     """A crash between the two swap renames leaves the table absent and
-    the data under '._old'; the next compact (or recover_compaction)
-    restores it instead of failing on the missing path."""
-    import os
+    the data under '._old'; the next compact (or recover_swap) restores
+    it instead of failing on the missing path."""
     import shutil
 
     from logstream_processing_service_spark.operators import maintenance as M
+    from logstream_processing_service_spark.sources.tables import recover_swap
 
     path = str(tmp_path / "tbl")
     spark.range(100).repartition(8).write.parquet(path)
     # simulate the crash window: table renamed away, new files not yet in
     os.rename(path, path + "._old")
-    shutil.os.makedirs(path + "._compact")
+    shutil.os.makedirs(path + "._staged")
     assert not os.path.exists(path)
-    assert M.recover_compaction(path) is True
-    assert not os.path.exists(path + "._compact")
+    assert recover_swap(path) is True
+    assert not os.path.exists(path + "._staged")
     assert spark.read.parquet(path).count() == 100
     # and compact_parquet itself self-heals when called on the wreck
     os.rename(path, path + "._old")
     stats = M.compact_parquet(spark, path, target_bytes=1 << 30)
     assert stats["files_after"] == 1
     assert spark.read.parquet(path).count() == 100
-    assert M.recover_compaction(path) is False  # clean state: no-op
+    assert recover_swap(path) is False  # clean state: no-op
+
+
+# Fault injection on the service's table write path (sources/tables.py):
+# a crash mid-swap must be recovered, and an unreadable table must fail
+# the write instead of being treated as absent.
+
+
+def _crash_mid_swap(path):
+    """The state a swap leaves when it dies between its two renames."""
+    os.rename(path, path + "._old")
+    os.makedirs(path + "._staged")
+
+
+def _corrupt_footers(path):
+    """Overwrite every data file's footer length + magic, then return the
+    table's on-disk contents for an unchanged-after check."""
+    for f in glob.glob(f"{path}/**/part-*.parquet", recursive=True):
+        with open(f, "r+b") as fh:
+            fh.seek(-8, 2)
+            fh.write(b"\xff" * 8)
+    return _snapshot(path)
+
+
+def _snapshot(path):
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            with open(os.path.join(root, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, f), path)] = fh.read()
+    return out
+
+
+def _kv(spark, lo, hi, tag):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("event_id"), F.lit(tag).alias("tag")
+    )
+
+
+def test_merge_parquet_after_crash_mid_swap(spark, tmp_path):
+    from logstream_processing_service_spark.sources.tables import merge_parquet
+
+    path = str(tmp_path / "merged")
+    merge_parquet(spark, path, _kv(spark, 0, 100, "base"), key="event_id")
+    _crash_mid_swap(path)
+    merge_parquet(spark, path, _kv(spark, 100, 110, "new"), key="event_id")
+    rows = dict(map(tuple, spark.read.parquet(path).collect()))
+    assert len(rows) == 110
+    assert all(rows[i] == "base" for i in range(100))
+    assert all(rows[i] == "new" for i in range(100, 110))
+    assert not os.path.exists(path + "._old")
+    assert not os.path.exists(path + "._staged")
+
+
+def test_merge_parquet_over_corrupt_table_raises(spark, tmp_path):
+    from logstream_processing_service_spark.sources.tables import merge_parquet
+
+    path = str(tmp_path / "merged")
+    merge_parquet(spark, path, _kv(spark, 0, 100, "base"), key="event_id")
+    before = _corrupt_footers(path)
+    with pytest.raises(Exception):
+        merge_parquet(spark, path, _kv(spark, 100, 110, "new"), key="event_id")
+    assert _snapshot(path) == before
+
+
+def test_upsert_parquet_over_corrupt_table_raises(spark, tmp_path):
+    from logstream_processing_service_spark.pipelines import upsert_parquet
+
+    path = str(tmp_path / "upserted")
+    upsert_parquet(spark, _kv(spark, 0, 100, "base"), path)
+    before = _corrupt_footers(path)
+    with pytest.raises(Exception):
+        upsert_parquet(spark, _kv(spark, 50, 110, "new"), path)
+    assert _snapshot(path) == before
+
+
+def test_incidents_read_over_corrupt_table_raises(spark, sf_dir, tmp_path):
+    """An unreadable incidents table must stop the anomaly pass, not be
+    read as 'no open incidents' and re-open every flagged cluster."""
+    from logstream_processing_service_spark.streaming.pipeline import (
+        run_anomaly_pipeline,
+    )
+
+    out = str(tmp_path / "anom")
+    inc = os.path.join(out, "incidents")
+    spark.range(0, 1500).selectExpr(
+        "id AS cluster_id", "'NEW' AS status", "current_timestamp() AS created_at"
+    ).write.parquet(inc)
+    before = _corrupt_footers(inc)
+    with pytest.raises(Exception):
+        run_anomaly_pipeline(spark, sf_dir, out)
+    assert _snapshot(inc) == before
+
+
+def test_minhash_dedup_sink_restores_registry_after_crash(spark, tmp_path):
+    from logstream_processing_service_spark.streaming.dedup import (
+        minhash_dedup_sink,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    other = "completely different content about parquet files and shuffles"
+    out = str(tmp_path / "dd")
+    reg = f"{out}/registry/data"
+    sink = minhash_dedup_sink(out)
+    sink(spark.createDataFrame([(1, text)], "doc_id long, text string"), 0)
+    reg0 = sorted(map(tuple, spark.read.parquet(reg).collect()))
+    assert reg0
+    _crash_mid_swap(reg)
+    # doc 2 duplicates accepted doc 1: only the restored registry knows it
+    sink(
+        spark.createDataFrame([(2, text), (3, other)], "doc_id long, text string"),
+        1,
+    )
+    reg1 = sorted(map(tuple, spark.read.parquet(reg).collect()))
+    assert set(reg0) <= set(reg1)
+    dropped = spark.read.parquet(f"{out}/dropped").collect()
+    assert {r["doc_id"] for r in dropped} == {2}
+    assert {first_doc_id for _, _, first_doc_id, _ in reg1} == {1, 3}
 
 
 def test_bloom_file_index_point_lookup(spark, sf_dir, tmp_path):

@@ -137,3 +137,27 @@ def test_jpeg_decodes_natively_and_mp4_remains_gated(spark):
         decode_media(b"\xff\xd8\xff", "image/jpeg")
     with pytest.raises(NotImplementedError):
         decode_media(b"\x00", "video/mp4")
+
+
+@pytest.mark.parametrize(
+    "module, fn",
+    [
+        ("gifcodec", "with_synthetic_gif_payload"),
+        ("jpegcodec", "with_blocky_jpeg_payload"),
+        ("mp4box", "with_mjpeg_mp4_payload"),
+        ("multimodal", "with_gradient_image_payload"),
+        ("multimodal", "with_tone_audio_payload"),
+    ],
+)
+def test_payload_builders_reject_zero_n_parts(spark, module, fn):
+    """``n_parts=0`` is invalid, not 'use the default' (``None`` is)."""
+    import importlib
+
+    build = getattr(
+        importlib.import_module(f"logstream_processing_service_spark.operators.{module}"),
+        fn,
+    )
+    docs = spark.range(3).withColumnRenamed("id", "doc_id")
+    assert build(docs).count() == 3
+    with pytest.raises(Exception, match="(?i)partition"):
+        build(docs, n_parts=0)
